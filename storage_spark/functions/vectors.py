@@ -676,6 +676,19 @@ def ivf_centroids(
     )
 
 
+def _training_sample(df: DataFrame, order: list[Column], n: int) -> DataFrame:
+    """The first ``n`` rows of ``df`` in ``order``, spread over the
+    session's cores and pinned, because every Lloyd round re-reads them.
+    A sort + limit leaves the rows in ONE partition, which would run each
+    round's assignment over the sample as a single task."""
+    return (
+        df.orderBy(*order)
+        .limit(n)
+        .repartition(df.sparkSession.sparkContext.defaultParallelism)
+        .localCheckpoint(eager=True)
+    )
+
+
 def ivf_centroids_kmeans(
     corpus: DataFrame,
     n_cells: int,
@@ -710,10 +723,10 @@ def ivf_centroids_kmeans(
     cents = ivf_centroids(corpus, n_cells, key_col, vector_col)
     train = corpus
     if iterations > 0 and train_sample_per_cell is not None:
-        train = (
-            corpus.orderBy(F.xxhash64(F.col(key_col)))
-            .limit(n_cells * train_sample_per_cell)
-            .localCheckpoint(eager=True)  # reused every Lloyd round
+        train = _training_sample(
+            corpus,
+            [F.xxhash64(F.col(key_col))],
+            n_cells * train_sample_per_cell,
         )
     for _ in range(iterations):
         assigned = ivf_assign(train, cents, metric, key_col, vector_col)
@@ -1265,11 +1278,10 @@ def pq_codebooks_kmeans(
     books = pq_codebooks(dim, m, k, seed)
     train = corpus
     if iterations > 0 and train_sample_per_code is not None:
-        train = (
-            corpus.select(F.col(vector_col))
-            .orderBy(F.xxhash64(F.col(vector_col)), F.col(vector_col))
-            .limit(k * train_sample_per_code)
-            .localCheckpoint(eager=True)  # reused every Lloyd round
+        train = _training_sample(
+            corpus.select(F.col(vector_col)),
+            [F.xxhash64(F.col(vector_col)), F.col(vector_col)],
+            k * train_sample_per_code,
         )
     for _ in range(iterations):
         src = train.select(

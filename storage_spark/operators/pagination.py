@@ -78,6 +78,11 @@ def paginate(
     """Generator of pages: ``make_listing(start_after: str | None)`` must
     return a sorted listing DataFrame honoring the cursor (e.g.
     ``lambda after: list_objects_with_delimiter(df, …, start_after=after)``).
+
+    A walk whose ``max_pages``-th page is still truncated raises
+    ``RuntimeError`` naming the resume token instead of ending as if the
+    listing were complete; a new walk whose ``make_listing`` starts after
+    ``decode_token(token)`` continues it.
     """
     token = None
     for _ in range(max_pages):
@@ -86,3 +91,7 @@ def paginate(
         if not page.is_truncated:
             return
         token = page.next_token
+    raise RuntimeError(
+        f"paginate stopped after max_pages={max_pages} pages with more "
+        f"rows left; resume token {token!r}"
+    )

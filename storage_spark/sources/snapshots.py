@@ -30,7 +30,19 @@ the engine actually needs, with Spark doing all data movement:
   unavailable for a merge key) are conservatively treated as affected.
 - **Snapshot-isolated reads + time travel.** A reader resolves a
   manifest once and scans an immutable file set; ``read(version=N)``
-  reads any retained snapshot.
+  reads any retained snapshot. The manifest's schema is handed to the
+  parquet reader, so a read runs no footer-inference job, and files
+  written before a schema-evolving commit read the newer columns as NULL.
+- **One pass over the caller's batch.** A merge commit persists the batch
+  for its own duration (key bounds, merge join, union all read it) and
+  releases it when the commit ends; a batch the caller already cached is
+  the caller's to release and is left cached. The merge result goes
+  straight to new files; the commit pins nothing that outlives it.
+- **Incremental clustering.** Each manifest's ``clustered`` map names the
+  partitions whose files are in a ``compact(sort_by=…)`` layout, as
+  ``{partition: [sort_by, target_fanout]}``. Merges carry the entries of
+  the partitions they do not touch, so a repeated clustering compact
+  re-sorts only the partitions that changed since the last one.
 
 At 100 TB the manifest is the only driver-side object, one entry per
 live FILE (table formats page this through avro manifests; a JSON list
@@ -43,6 +55,7 @@ import json
 import os
 import uuid
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -132,6 +145,17 @@ def _harvest_file_stats(spark: SparkSession, paths: list[str]) -> dict[str, dict
         .collect()
     )
     return {r["path"]: json.loads(r["stats"]) for r in rows}
+
+
+def _live_stats(
+    m: dict, files: dict[str, list[str]], new_stats: dict[str, dict]
+) -> dict[str, dict]:
+    """The next manifest's per-file stats: the parent's entries for the
+    files still live, plus the stats of the files this commit wrote."""
+    live = {f for fs in files.values() for f in fs}
+    stats = {f: s for f, s in m.get("stats", {}).items() if f in live}
+    stats.update(new_stats)
+    return stats
 
 
 class SnapshotTable:
@@ -302,69 +326,68 @@ class SnapshotTable:
 
     def _read_files(self, m: dict, paths: list[str]) -> DataFrame:
         """Scan an explicit file subset of a resolved manifest (the
-        file-pruned merge scope); schema comes from the manifest."""
-        cols = m["columns"]
+        file-pruned merge scope). The manifest schema is authoritative and
+        is passed to the reader, so no footer-inference job runs: a file
+        written before a schema-evolving commit reads the newer columns as
+        NULL. Files store the partition column only as its ``__part_dup``
+        copy; it is restored under its own name in manifest column order."""
+        from pyspark.sql.types import StructField, StructType
+
+        schema = StructType.fromJson(json.loads(m["schema_json"]))
         if not paths:
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(json.loads(m["schema_json"]))
             return self.spark.createDataFrame([], schema)
-        # mergeSchema: after a schema-evolving commit, files written
-        # before the new column existed simply read it as NULL
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-        for field in json.loads(m["schema_json"])["fields"]:
-            # a pruned read may touch only pre-evolution files; the
-            # manifest schema is authoritative
-            if field["name"] not in df.columns:
-                from pyspark.sql.types import StructField
-
-                df = df.withColumn(
-                    field["name"],
-                    F.lit(None).cast(
-                        StructField.fromJson(field).dataType
-                    ),
-                )
-        # restore the partition column from its in-data duplicate and the
-        # original column order
+        part = schema[self.partition_col]
+        file_schema = StructType(
+            [f for f in schema.fields if f.name != self.partition_col]
+            + [StructField(self._DUP, part.dataType, True)]
+        )
+        df = self.spark.read.schema(file_schema).parquet(*paths)
         return df.withColumn(
             self.partition_col, F.col(self._DUP)
-        ).select(*cols)
+        ).select(*m["columns"])
 
     # ------------------------------------------------------ merge commits
 
     def _prune_affected_files(
-        self, m: dict, batch: DataFrame, touched: list[str], keys: list[str]
-    ) -> tuple[list[str], dict[str, list[str]]]:
-        """Split the touched partitions' files into (affected, carried):
-        a file is AFFECTED iff, for EVERY non-partition merge key, its
-        footer [min, max] intersects the batch's per-partition key bounds
-        — any row equal to a batch key on all keys must live in such a
-        file, so carrying the rest by reference is sound. Files without
-        stats (pre-stats manifests, unstatted column types) are affected
-        conservatively. No non-partition keys → whole partitions rewrite
-        (the delete-all-in-partition shape has no key bounds to prune on).
+        self, m: dict, batch: DataFrame, keys: list[str]
+    ) -> tuple[list[str], list[str], dict[str, list[str]]]:
+        """Return ``(touched, affected, carried)``: the partitions the
+        batch holds, and their files split into those the merge rewrites
+        and those it carries by reference. One ``groupBy(partition_col)``
+        job yields both the touched partitions and the batch's
+        per-partition key bounds. A file is AFFECTED iff, for EVERY
+        non-partition merge key, its footer [min, max] intersects those
+        bounds — any row equal to a batch key on all keys must live in
+        such a file, so carrying the rest by reference is sound. Files
+        without stats (pre-stats manifests, unstatted column types) are
+        affected conservatively. No non-partition keys → whole partitions
+        rewrite (the delete-all-in-partition shape has no key bounds to
+        prune on).
         """
         prune_cols = [k for k in keys if k != self.partition_col]
-        stats = m.get("stats", {})
-        if not prune_cols or not stats:
-            aff = [f for p in touched for f in m["files"].get(p, [])]
-            return aff, {p: [] for p in touched}
-        aggs = []
+        # the count keeps the aggregate non-empty when the partition
+        # column is the only key
+        aggs = [F.count(F.lit(1)).alias("_n")]
         for c in prune_cols:
             aggs += [F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}")]
         bounds = {
             str(r[self.partition_col]): r
             for r in batch.groupBy(self.partition_col).agg(*aggs).collect()
         }
+        touched = sorted(bounds)
+        stats = m.get("stats", {})
+        if not prune_cols or not stats:
+            aff = [f for p in touched for f in m["files"].get(p, [])]
+            return touched, aff, {p: [] for p in touched}
         affected: list[str] = []
         carried: dict[str, list[str]] = {}
         for p in touched:
             carried[p] = []
-            b = bounds.get(p)
+            b = bounds[p]
             for f in m["files"].get(p, []):
                 fstats = stats.get(f)
                 hit = True
-                if b is not None and fstats is not None:
+                if fstats is not None:
                     for c in prune_cols:
                         rng = fstats.get(c)
                         lo, hi = b[f"_lo_{c}"], b[f"_hi_{c}"]
@@ -377,7 +400,7 @@ class SnapshotTable:
                     affected.append(f)
                 else:
                     carried[p].append(f)
-        return affected, carried
+        return touched, affected, carried
 
     def _merge_commit(
         self,
@@ -391,46 +414,59 @@ class SnapshotTable:
         key bounds), merge, write replacement files, carry everything
         else forward by reference, commit the pointer.
 
+        The batch is read by the key-bounds aggregate, the merge join and
+        (for upserts) the union, so it is persisted for the length of the
+        commit and released in ``finally``: the caller's rows are computed
+        once, and the cached relation's size statistics let the optimizer
+        broadcast it into the join. A batch that is already cached belongs
+        to the caller and is left cached. The merge result is written
+        straight to new files — nothing else is pinned; an empty result
+        writes no partition directory.
+
         ``evolve_schema=True`` admits batches carrying columns the table
         does not have yet (table-format ADD COLUMN semantics): affected
         files rewrite with the new column populated, carried files stay
         as-is and read the column as NULL, and the manifest schema
         appends the new fields. Without the flag an unknown column
-        raises — silent drift is worse than a failed commit."""
+        raises — silent drift is worse than a failed commit.
+
+        The manifest's ``clustered`` entries (see ``compact``) survive for
+        the partitions the batch does not touch; a touched partition's
+        new files are not in its sort order, so its entry is dropped."""
         from pyspark.sql.types import StructType
 
-        touched = [
-            str(r[0])
-            for r in batch.select(self.partition_col).distinct().collect()
-        ]
-        m = self._manifest()
-        affected, carried = self._prune_affected_files(
-            m, batch, touched, keys
-        )
-        scoped = self._read_files(m, affected)
-        extra = [
-            f for f in batch.schema.fields if f.name not in scoped.columns
-        ]
-        if extra and not evolve_schema:
-            raise ValueError(
-                f"batch adds columns {[f.name for f in extra]}; pass "
-                "evolve_schema=True to evolve the table schema"
+        owned = batch.storageLevel == StorageLevel.NONE
+        if owned:
+            batch.persist()
+        try:
+            m = self._manifest()
+            touched, affected, carried = self._prune_affected_files(
+                m, batch, keys
             )
-        columns = list(m["columns"])
-        schema = StructType.fromJson(json.loads(m["schema_json"]))
-        if extra:
-            for f in extra:
-                scoped = scoped.withColumn(
-                    f.name, F.lit(None).cast(f.dataType)
+            scoped = self._read_files(m, affected)
+            extra = [
+                f for f in batch.schema.fields if f.name not in scoped.columns
+            ]
+            if extra and not evolve_schema:
+                raise ValueError(
+                    f"batch adds columns {[f.name for f in extra]}; pass "
+                    "evolve_schema=True to evolve the table schema"
                 )
-                columns.append(f.name)
-            schema = StructType(list(schema.fields) + list(extra))
-        merged = merge_fn(scoped).localCheckpoint(eager=True)
-        new_files, new_stats = (
-            self._write_data_files(merged) if merged.take(1) else ({}, {})
-        )
+            columns = list(m["columns"])
+            schema = StructType.fromJson(json.loads(m["schema_json"]))
+            if extra:
+                for f in extra:
+                    scoped = scoped.withColumn(
+                        f.name, F.lit(None).cast(f.dataType)
+                    )
+                    columns.append(f.name)
+                schema = StructType(list(schema.fields) + list(extra))
+            new_files, new_stats = self._write_data_files(merge_fn(scoped))
+        finally:
+            if owned:
+                batch.unpersist()
         files = {
-            p: fs for p, fs in m["files"].items() if p not in set(touched)
+            p: fs for p, fs in m["files"].items() if p not in carried
         }
         for p in touched:
             # carried siblings (by reference) + this merge's replacements;
@@ -440,10 +476,6 @@ class SnapshotTable:
             if fs:
                 files[p] = fs
         files.update(new_files)  # partitions new in this batch
-        old_stats = m.get("stats", {})
-        live = {f for fs in files.values() for f in fs}
-        stats = {f: s for f, s in old_stats.items() if f in live}
-        stats.update(new_stats)
         return self._commit_manifest(
             {
                 "version": m["version"] + 1,
@@ -451,7 +483,12 @@ class SnapshotTable:
                 "columns": columns,
                 "schema_json": schema.json(),
                 "files": files,
-                "stats": stats,
+                "stats": _live_stats(m, files, new_stats),
+                "clustered": {
+                    p: c
+                    for p, c in m.get("clustered", {}).items()
+                    if p not in carried
+                },
             }
         )
 
@@ -569,30 +606,45 @@ class SnapshotTable:
         concurrent writer turns this into ``CommitConflictError``, which
         ``with_retry`` replays against the new snapshot.
 
-        Returns the new version, or None when nothing is crowded (no
+        Returns the new version, or None when nothing needs rewriting (no
         empty commit). This is the OPTIMIZE half of a table format's
         maintenance loop (expire_snapshots + vacuum is the other); at
         100 TB you run it partition-incremental exactly like this —
         only crowded partitions pay the rewrite.
 
+        ``sort_by`` clusters instead: a partition is rewritten, crowded or
+        not, unless it is already in the requested layout. The manifest's
+        ``clustered`` map records ``{partition: [sort_by, target_fanout]}``
+        for the partitions a clustering compact rewrote; merges carry the
+        entries of the partitions they leave untouched, so a repeated
+        ``compact(sort_by=…)`` re-sorts only the partitions that changed
+        since. A manifest without the key clusters every partition.
+
         ``zorder_by`` (mutually exclusive with ``sort_by``) clusters each
         partition's files on a Morton-interleaved key over the named
         NUMERIC columns instead of a lexicographic sort — multi-dimension
         file skipping (see ``layout.morton_code``); per-column min/max
-        comes from one tiny agg over the rewritten scope."""
+        comes from one tiny agg over the rewritten scope. The Morton
+        scaling depends on that table-wide min/max, so a z-order compact
+        always rewrites every partition and records no ``clustered``
+        entry."""
         assert not (sort_by and zorder_by), "sort_by and zorder_by conflict"
         m = self._manifest()
-        crowded = [
-            p
-            for p, fs in m["files"].items()
-            if len(fs) > max_files_per_partition
-        ]
-        if sort_by or zorder_by:
-            # clustering rewrite: every partition re-sorts, crowded or not
-            crowded = list(m["files"])
-        if not crowded:
+        clustered = m.get("clustered", {})
+        layout = [list(sort_by), target_fanout] if sort_by else None
+        if zorder_by:
+            rewrite = list(m["files"])
+        elif sort_by:
+            rewrite = [p for p in m["files"] if clustered.get(p) != layout]
+        else:
+            rewrite = [
+                p
+                for p, fs in m["files"].items()
+                if len(fs) > max_files_per_partition
+            ]
+        if not rewrite:
             return None
-        scoped = self.read(partitions=crowded)
+        scoped = self.read(partitions=rewrite)
         if zorder_by:
             from storage_spark.sources.layout import morton_code
 
@@ -613,14 +665,12 @@ class SnapshotTable:
         new_files, new_stats = self._write_data_files(
             scoped, fanout=target_fanout, sort_by=sort_by
         )
-        files = {
-            p: fs for p, fs in m["files"].items() if p not in set(crowded)
-        }
+        gone = set(rewrite)
+        files = {p: fs for p, fs in m["files"].items() if p not in gone}
         files.update(new_files)
-        old_stats = m.get("stats", {})
-        live = {f for fs in files.values() for f in fs}
-        stats = {f: s for f, s in old_stats.items() if f in live}
-        stats.update(new_stats)
+        clustered = {p: c for p, c in clustered.items() if p not in gone}
+        if layout:
+            clustered.update({p: layout for p in new_files})
         return self._commit_manifest(
             {
                 "version": m["version"] + 1,
@@ -628,8 +678,9 @@ class SnapshotTable:
                 "columns": m["columns"],
                 "schema_json": m["schema_json"],
                 "files": files,
-                "stats": stats,
-                "compacted_partitions": sorted(crowded),
+                "stats": _live_stats(m, files, new_stats),
+                "compacted_partitions": sorted(rewrite),
+                "clustered": clustered,
             }
         )
 

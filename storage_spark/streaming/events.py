@@ -223,9 +223,9 @@ def run_snapshot_ingest(
     applied batch, and every version stays time-travel readable."""
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.localCheckpoint(eager=True)
+        # the merge commit caches the batch for its own duration
         table.with_retry(
-            lambda: table.merge_upsert(batch, keys), attempts=attempts
+            lambda: table.merge_upsert(batch_df, keys), attempts=attempts
         )
 
     q = (

@@ -283,3 +283,32 @@ def test_upload_id_codec():
         decode_upload_id("!!!notbase64")
     with _pytest.raises(ValueError):
         decode_upload_id(encode_upload_id("", "k", "v"))  # empty bucket invalid
+
+
+def _five_row_listing(spark):
+    df = spark.createDataFrame([(f"k{i}",) for i in range(5)], "name string")
+
+    def listing(after):
+        rows = df if after is None else df.filter(df.name > after)
+        return rows.orderBy("name")
+
+    return listing
+
+
+def test_paginate_raises_when_max_pages_cuts_a_truncated_walk(spark):
+    """Three 1-key pages of a 5-key listing leave two keys unlisted: the
+    walk must fail with the resume token, not end as if complete."""
+    pages = []
+    with pytest.raises(RuntimeError, match="max_pages=3") as err:
+        for page in paginate(_five_row_listing(spark), limit=1, max_pages=3):
+            pages.append(page)
+    assert [p.rows[0].name for p in pages] == ["k0", "k1", "k2"]
+    assert pages[-1].is_truncated
+    assert repr(pages[-1].next_token) in str(err.value)
+    assert decode_token(pages[-1].next_token) == "k2"
+
+
+def test_paginate_ending_on_its_last_allowed_page_returns(spark):
+    pages = list(paginate(_five_row_listing(spark), limit=1, max_pages=5))
+    assert [p.rows[0].name for p in pages] == [f"k{i}" for i in range(5)]
+    assert not pages[-1].is_truncated

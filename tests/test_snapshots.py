@@ -839,3 +839,134 @@ def test_file_pruned_merge_composes_with_schema_evolution(spark, tmp_path):
     # rows from carried (pre-evolution) files read the new column as NULL
     assert got.filter(F.col("tier").isNull()).count() == 399
     assert got.count() == 400
+
+
+# --------------------------------------------------------------------------
+# commit budgets: jobs per commit, incremental clustering, batch cache
+# --------------------------------------------------------------------------
+
+
+def _count_jobs(spark, fn):
+    """Run ``fn`` under a fresh job group; return (result, jobs it ran)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_SCHEMA = "bucket_id string, name string, payload string, size long"
+
+
+def _clustered_table(spark, tmp_path, name, buckets=("b1", "b2", "b3", "b4")):
+    t = SnapshotTable(spark, str(tmp_path / name))
+    rows = [(b, f"k{i:04d}", f"v{i}", i) for b in buckets for i in range(300)]
+    t.create(spark.createDataFrame(rows, _SCHEMA))
+    t.compact(sort_by=["name"])
+    return t
+
+
+def test_merge_commits_stay_within_job_budget(spark, tmp_path):
+    """An upsert and a delete each read the batch once (it is cached for
+    the commit), take the touched partitions from the key-bounds
+    aggregate and write the merge result directly: at most 6 jobs each."""
+    t = _clustered_table(spark, tmp_path, "budget")
+    ups = spark.createDataFrame(
+        [("b1", f"k{i:04d}", "U", 1) for i in range(0, 300, 7)]
+        + [("b1", f"n{i:03d}", "N", 2) for i in range(40)],
+        _SCHEMA,
+    )
+    v, n_up = _count_jobs(
+        spark, lambda: t.merge_upsert(ups, ["bucket_id", "name"])
+    )
+    assert v == 3 and n_up <= 6, n_up
+    dels = spark.createDataFrame(
+        [("b1", f"k{i:04d}") for i in range(1, 300, 11)],
+        "bucket_id string, name string",
+    )
+    v, n_del = _count_jobs(
+        spark, lambda: t.merge_delete(dels, ["bucket_id", "name"])
+    )
+    assert v == 4 and n_del <= 6, n_del
+    got = _rows(t.read())
+    assert len(got) == 4 * 300 + 40 - len(range(1, 300, 11))
+    assert got[("b1", "k0007")] == ("U", 1)
+    assert ("b1", "k0001") not in got
+
+
+def test_clustered_compact_rewrites_only_changed_partitions(spark, tmp_path):
+    t = _clustered_table(spark, tmp_path, "incr")
+    m = t._manifest()
+    layout = [["name"], 1]
+    assert m["clustered"] == {p: layout for p in ("b1", "b2", "b3", "b4")}
+    t.merge_upsert(
+        spark.createDataFrame([("b2", "k0005", "U", 1)], _SCHEMA),
+        ["bucket_id", "name"],
+    )
+    merged = t._manifest()
+    # the merge keeps the entries of the partitions it did not touch
+    assert set(merged["clustered"]) == {"b1", "b3", "b4"}
+    hashes = _md5s([f for fs in merged["files"].values() for f in fs])
+    v, n_jobs = _count_jobs(spark, lambda: t.compact(sort_by=["name"]))
+    after = t._manifest(v)
+    assert after["compacted_partitions"] == ["b2"]
+    assert after["clustered"] == {p: layout for p in ("b1", "b2", "b3", "b4")}
+    assert n_jobs <= 2, n_jobs
+    for p in ("b1", "b3", "b4"):
+        assert after["files"][p] == merged["files"][p]
+        assert _md5s(after["files"][p]) == {
+            f: hashes[f] for f in merged["files"][p]
+        }
+    assert after["files"]["b2"] != merged["files"]["b2"]
+    names = [r.name for r in t.read(partitions=["b2"]).collect()]
+    assert names == sorted(names) and len(names) == 300
+    # nothing changed since: the same layout request is a no-op
+    assert t.compact(sort_by=["name"]) is None
+    # a different layout re-sorts everything
+    assert t.compact(sort_by=["size"])
+    assert t._manifest()["compacted_partitions"] == ["b1", "b2", "b3", "b4"]
+
+
+def test_compact_without_clustered_key_rewrites_every_partition(
+    spark, tmp_path
+):
+    """Manifests written before the ``clustered`` key existed give no
+    layout to trust: a clustering compact rewrites every partition."""
+    t = _clustered_table(spark, tmp_path, "legacy")
+    mpath = os.path.join(t._commits_dir, sorted(os.listdir(t._commits_dir))[-1])
+    m = json.load(open(mpath))
+    del m["clustered"]
+    json.dump(m, open(mpath, "w"))
+    v = t.compact(sort_by=["name"])
+    after = t._manifest(v)
+    assert after["compacted_partitions"] == ["b1", "b2", "b3", "b4"]
+    live = {f for fs in after["files"].values() for f in fs}
+    assert not live & {f for fs in m["files"].values() for f in fs}
+    assert t.read().count() == 4 * 300
+
+
+def test_merge_leaves_the_callers_cache_alone(spark, table):
+    from pyspark import StorageLevel
+
+    keys = ["bucket_id", "name"]
+    plain = spark.createDataFrame([("b1", "k0", "P", 1)], _SCHEMA)
+    table.merge_upsert(plain, keys)
+    assert not plain.is_cached
+    assert plain.storageLevel == StorageLevel.NONE
+
+    cached = spark.createDataFrame([("b2", "k0", "C", 2)], _SCHEMA).cache()
+    try:
+        table.merge_upsert(cached, keys)
+        assert cached.is_cached
+        assert cached.storageLevel != StorageLevel.NONE
+    finally:
+        cached.unpersist()
+    got = _rows(table.read())
+    assert got[("b1", "k0")] == ("P", 1) and got[("b2", "k0")] == ("C", 2)

@@ -186,6 +186,26 @@ def test_ivf_kmeans_refinement(spark, sf_dir):
     assert recall > 0.3, f"refined-IVF recall suspiciously low: {recall:.2f}"
 
 
+def test_kmeans_training_sample_spreads_over_cores(spark, sf_dir):
+    """The Lloyd training sample (a sort + limit, which lands in one
+    partition) is spread over the session's cores, so each round's
+    assignment runs as several tasks; its rows are the same hash-order
+    take."""
+    from storage_spark.functions.vectors import _training_sample
+
+    cores = spark.sparkContext.defaultParallelism
+    if cores < 2:
+        pytest.skip("a one-core session has nothing to spread over")
+    v = _vectors(spark, sf_dir)
+    order = [F.xxhash64(F.col("key"))]
+    sample = _training_sample(v, order, 64)
+    sizes = sample.rdd.glom().map(len).collect()
+    assert len(sizes) == cores
+    assert sum(1 for n in sizes if n) > 1
+    want = {r.key for r in v.orderBy(*order).limit(64).collect()}
+    assert {r.key for r in sample.collect()} == want
+
+
 def test_segments_disjoint_and_covering(spark, sf_dir):
     v = _vectors(spark, sf_dir)
     total = v.count()
